@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cqu_bigdata_recommender_system_for_movies_spark.plans.registry import register
-from cqu_bigdata_recommender_system_for_movies_spark.session import shuffle_partitions
+from cqu_bigdata_recommender_system_for_movies_spark.session import cache_put, shuffle_partitions
 from cqu_bigdata_recommender_system_for_movies_spark.tables import load, scan_fanout
 
 SHINGLE_N = 5
@@ -147,17 +147,6 @@ _ARRAYS_CACHE: dict[tuple[str, str], DataFrame] = {}
 _POPCOUNTS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
-def _cache_put(cache: dict, key: tuple[str, str], df: DataFrame) -> DataFrame:
-    """Insert and evict entries from other (dead) Spark contexts: their
-    checkpoint blocks died with the context, and keeping the DataFrames
-    would pin py4j refs for the life of a process that restarts sessions."""
-    stale = [k for k in cache if k[0] != key[0]]
-    for k in stale:
-        del cache[k]
-    cache[key] = df
-    return df
-
-
 def _doc_hash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, hvs: array<long>): each doc's DISTINCT shingle-hash set as a
     compact array, materialized once via ``localCheckpoint`` — the verify
@@ -168,7 +157,7 @@ def _doc_hash_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     footprint a real pipeline would write out as its signature table."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _ARRAYS_CACHE:
-        _cache_put(
+        cache_put(
             _ARRAYS_CACHE,
             key,
             _shingles_raw(spark, sf_dir)
@@ -438,7 +427,7 @@ def _simhash_value_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"if(p{b}*2 >= n, {_bit_weight(b)}L, 0L)"
             for b in range(SIMHASH_BITS)
         )
-        _cache_put(
+        cache_put(
             _POPCOUNTS_CACHE,
             key,
             base.selectExpr(
@@ -823,7 +812,7 @@ _PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
 def _pair_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _PAIRS_CACHE:
-        _cache_put(
+        cache_put(
             _PAIRS_CACHE,
             key,
             ngram_jaccard_pairs(spark, sf_dir)

@@ -73,3 +73,15 @@ def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:
             return int(spark.sparkContext.defaultParallelism)
         except Exception:
             return default
+
+
+def cache_put(cache: dict, key: tuple, value):
+    """Insert ``value`` under ``key``, whose first element is the owning
+    context's ``applicationId``, and evict entries of other (dead)
+    contexts: their checkpoint blocks and JVM objects died with the
+    context, and keeping them would pin py4j refs for the life of a
+    process that restarts sessions."""
+    for k in [k for k in cache if k[0] != key[0]]:
+        del cache[k]
+    cache[key] = value
+    return value

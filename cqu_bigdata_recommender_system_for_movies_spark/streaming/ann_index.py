@@ -754,9 +754,8 @@ def maintain_index(
         # (ver=s), plus for s >= 2 the re-embedded updates of slice s-2
         # (ver=s — ver doubles as the arrival slice, so winners are
         # data-derived and immune to the file source merging batches).
-        # Slices are written SEQUENTIALLY so file mtimes follow version
-        # order; correctness never depends on it (max-ver wins), it just
-        # makes the replay realistic.
+        # File mtimes follow version order; correctness never depends on
+        # it (max-ver wins), it just makes the replay realistic.
         mod = n_slices - 1 if deletes else n_slices
         orig = emb.select(
             "vec_id",
@@ -792,7 +791,9 @@ def maintain_index(
             # so the mtimes are staggered driver-side (microseconds of
             # os.utime, no Spark job) to keep the REALISTIC replay the
             # old sequential writes produced: versions arrive in order,
-            # the tombstone slice last.
+            # the tombstone slice last. The stagger is back-dated, so no
+            # file carries an mtime later than the end of staging (file
+            # age accounting such as maxFileAge assumes mtime <= now).
             (
                 versions.repartition(n_slices, "ver")
                 .write.mode("overwrite")
@@ -804,7 +805,7 @@ def maintain_index(
                 vdir = os.path.join(stage_dir, f"ver={s}")
                 if os.path.isdir(vdir):
                     for f in os.listdir(vdir):
-                        t = base_t + s * 2.0
+                        t = base_t - 2.0 * (n_slices - s)
                         os.utime(os.path.join(vdir, f), (t, t))
         read_schema = "vec_id long, e array<double>, ver integer, op string"
         stream = (

@@ -380,7 +380,7 @@ def test_user_fold_in_rmse_within_retrain_band(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from cqu_bigdata_recommender_system_for_movies_spark.ml.als import (
-        _MODEL_CACHE,
+        _cached_model,
         fit_als,
     )
     from cqu_bigdata_recommender_system_for_movies_spark.ml.foldin import (
@@ -417,12 +417,12 @@ def test_user_fold_in_rmse_within_retrain_band(spark, sf_dir):
 
     # full retrain: the expensive path the fold-in replaces — ALL ratings,
     # same hyperparameters, evaluated on the SAME scorable holdout rows
-    key = (sf_dir, "foldin_full_retrain")
-    if key not in _MODEL_CACHE:
-        _MODEL_CACHE[key] = fit_als(
-            ratings(spark, sf_dir).select("user_id", "item_id", "rating")
-        )
-    full = _MODEL_CACHE[key]
+    full = _cached_model(
+        spark,
+        sf_dir,
+        "foldin_full_retrain",
+        lambda: fit_als(ratings(spark, sf_dir).select("user_id", "item_id", "rating")),
+    )
     retrain_rmse = (
         full.transform(joined.select("user_id", "item_id", "rating"))
         .select(((F.col("prediction") - F.col("rating")) ** 2).alias("se"))
@@ -438,3 +438,30 @@ def test_user_fold_in_rmse_within_retrain_band(spark, sf_dir):
         "than the documented retrain trade (measured plateau ~1.45x on "
         "this fixture's near-noise ratings)"
     )
+
+
+def test_als_caches_follow_the_application_id(spark, sf_dir, monkeypatch):
+    """A SparkContext restart in the same process gets a new
+    applicationId. The split and every cached model must be rebuilt under
+    it (a model fitted under the stopped context is bound to a dead JVM),
+    and the dead application's entries must be evicted. The restart is
+    simulated by swapping the id, so the shared session keeps running;
+    fit_als is stubbed so no fit runs."""
+    from cqu_bigdata_recommender_system_for_movies_spark.ml import als, foldin
+
+    app = {"id": "app-before-restart"}
+    monkeypatch.setattr(
+        type(spark.sparkContext), "applicationId", property(lambda sc: app["id"])
+    )
+    monkeypatch.setattr(als, "_MODEL_CACHE", {})
+    monkeypatch.setattr(als, "_SPLIT_CACHE", {})
+    monkeypatch.setattr(als, "fit_als", lambda train, *a, **k: object())
+    monkeypatch.setattr(foldin, "fit_als", lambda train, *a, **k: object())
+
+    split_model, _, _ = als._split_model(spark, sf_dir)
+    foldin_model = foldin._train_model(spark, sf_dir)
+    app["id"] = "app-after-restart"
+    assert als._split_model(spark, sf_dir)[0] is not split_model
+    assert foldin._train_model(spark, sf_dir) is not foldin_model
+    for cache in (als._MODEL_CACHE, als._SPLIT_CACHE):
+        assert cache and {k[0] for k in cache} == {"app-after-restart"}

@@ -956,6 +956,44 @@ def test_ann_index_upsert_last_writer_wins_and_purges(spark, sf_dir):
         shutil.rmtree(base + "_gen1_purgetest", ignore_errors=True)
 
 
+def test_ann_index_staged_mtimes_are_past_and_version_ordered(
+    spark, sf_dir, monkeypatch
+):
+    """The versioned staging staggers file mtimes so the file source
+    replays slices in version order. Every staged ver=* file must carry
+    an mtime no later than the moment it was set (the end of staging),
+    and the mtimes must strictly increase with ver."""
+    import os
+    import re
+
+    from cqu_bigdata_recommender_system_for_movies_spark.streaming.ann_index import (
+        N_UPSERT_SLICES,
+        maintain_index,
+    )
+
+    staged: list[tuple[int, float, float]] = []  # (ver, mtime, set at)
+    real_utime = os.utime
+
+    def recording_utime(path, times=None, **kw):
+        real_utime(path, times, **kw)
+        ver = re.search(r"ver=(\d+)", str(path))
+        if ver:
+            staged.append((int(ver.group(1)), os.stat(path).st_mtime, time.time()))
+
+    monkeypatch.setattr(os, "utime", recording_utime)
+    maintain_index(
+        spark, sf_dir, "spark_graft_ann_stage_mtime_test", N_UPSERT_SLICES, upsert=True
+    )
+    monkeypatch.undo()
+
+    assert {v for v, _, _ in staged} == set(range(N_UPSERT_SLICES))
+    assert all(mtime <= set_at for _, mtime, set_at in staged)
+    for v in range(N_UPSERT_SLICES - 1):
+        assert max(m for w, m, _ in staged if w == v) < min(
+            m for w, m, _ in staged if w == v + 1
+        )
+
+
 def test_ann_index_delete_tombstones_and_physical_purge(spark, sf_dir):
     """The removal path: a final tombstone slice deletes vec_id%4==2.
     (a) The live index equals the one-pass assignment over the post-CRUD
